@@ -15,16 +15,17 @@ import graft.tables._
   *  1. **Prune**: target-only conjuncts of the merge condition select
   *     candidate files via partition values + per-file min/max stats
   *     ([[FileSkipping]]) — no data read for excluded files.
-  *  2. **Touch**: inner join candidates × source on the condition → the
-  *     distinct set of files containing ≥1 matching row. Only these are
-  *     rewritten; everything else is untouched (at 100 TB, rewrite cost is
-  *     proportional to matched files, not table size).
-  *  3. **Rewrite**: full-outer join of touched-file rows × source on the
-  *     condition; per-row clause disposition with `when/otherwise` (codegen'd
-  *     CASE, no UDFs); deletes drop, updates substitute, unmatched source
+  *  2. **Join**: ONE full-outer join of candidate rows × source on the
+  *     condition, checkpointed; per-row clause disposition with
+  *     `when/otherwise` (codegen'd CASE, no UDFs).
+  *  3. **Touch**: one aggregate over the join yields the files containing
+  *     ≥1 matched (or by-source) row, the row metrics and the multi-match
+  *     guard. Only touched files are rewritten; everything else is
+  *     untouched (at 100 TB, rewrite cost is proportional to matched files,
+  *     not table size). Deletes drop, updates substitute, unmatched source
   *     inserts, unmatched target copies.
   *  4. **Commit**: new files + removes + MERGE metrics (+ CDC pre/post
-  *     images when the table has CDF enabled).
+  *     images when the table has CDF enabled, written beside the data).
   *
   * Join strategy is left to Catalyst/AQE — a small source broadcasts
   * automatically; skewed keys re-split under AQE skew-join handling.
@@ -223,7 +224,6 @@ object GraftMerge {
   private val FileCol = "__graft_file"
   private val TgtExists = "__graft_tgt"
   private val SrcExists = "__graft_src"
-  private val SrcIdCol = "__graft_srcid"
   private val Copy = 0
   private val Drop = -1
   private def matchedCode(i: Int) = 100 + i
@@ -314,54 +314,55 @@ object GraftMerge {
       targetCols.exists(_.equalsIgnoreCase(a.name)) &&
         source.columns.exists(_.equalsIgnoreCase(srcName))
     }
-    val dynamicPreds: Seq[org.apache.spark.sql.catalyst.expressions.Expression] =
-      if (equiKeys.isEmpty) Nil
-      else {
-        val aggs = equiKeys.flatMap { case (_, s) => Seq(min(col(s)), max(col(s))) }
-        val row = source.agg(aggs.head, aggs.tail: _*).collect()(0)
-        equiKeys.zipWithIndex.flatMap { case ((attr, _), i) =>
-          if (row.isNullAt(2 * i)) Nil // all-null or empty source: no bound
-          else Seq(
-            CatGte(attr, CatLiteral.create(row.get(2 * i), attr.dataType)),
-            CatLte(attr, CatLiteral.create(row.get(2 * i + 1), attr.dataType)))
-        }
-      }
-
-    // NOT MATCHED BY SOURCE inverts the pruning logic: the affected rows
-    // are exactly the ones the merge condition does NOT select, so
-    // condition-derived file skipping would hide them — every file is a
-    // candidate (Delta's by-source merges scan the full table likewise)
-    val candidates =
-      if (bySourceN.nonEmpty) {
-        if (lazyMode) graft.tables.DistributedSnapshot.prunedFilesByExprs(
-          spark, table.path, snap, Nil) // full set — inherent to by-source
-        else snap.files
-      }
-      else TableOps.dmlCandidates(table, snap, lazyMode, targetOnly ++ dynamicPreds)
-    val scanTime = System.currentTimeMillis() - t0
 
     // source is always aliased so UpdateAll/InsertAll can reference its side
     // of the join unambiguously; user conditions with unqualified source
-    // column names still resolve (an alias hides nothing). Persisted because
-    // it feeds three consumers (touch-detection join, rewrite join, source
-    // count) — recomputing a shuffled source plan thrice is the single
-    // biggest overhead in merge-based dedup.
+    // column names still resolve (an alias hides nothing). Persisted BEFORE
+    // the range probe: the probe's single pass fills the cache every later
+    // consumer (the merge join, or the fast path's anti-join) reads, so the
+    // source plan runs once. Everything after the persist sits inside the
+    // try, so a failure anywhere (an unresolvable clause condition, a
+    // write error) still frees the cache and the checkpoint blocks.
+    val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
     val sourceCached = source.persist(StorageLevel.MEMORY_AND_DISK)
-    val srcAliasName = sourceAlias.getOrElse("__graft_src")
-    // SrcIdCol: a unique id per source row so numSourceRows falls out of the
-    // main merge aggregate (countDistinct) instead of a separate count job
-    val srcDf = sourceCached.withColumn(SrcExists, lit(true))
-      .withColumn(SrcIdCol, monotonically_increasing_id()).alias(srcAliasName)
-    val sourceColsRenamed = source.columns.toSeq
+    try {
+      // the probe row also carries numSourceRows: count first, then one
+      // (min, max) pair per equi-key
+      val probeAggs = count(lit(1)) +:
+        equiKeys.flatMap { case (_, s) => Seq(min(col(s)), max(col(s))) }
+      val probe = sourceCached.agg(probeAggs.head, probeAggs.tail: _*).collect()(0)
+      val numSourceRows = probe.getLong(0)
+      val dynamicPreds: Seq[org.apache.spark.sql.catalyst.expressions.Expression] =
+        equiKeys.zipWithIndex.flatMap { case ((attr, _), i) =>
+          if (probe.isNullAt(1 + 2 * i)) Nil // all-null or empty source: no bound
+          else Seq(
+            CatGte(attr, CatLiteral.create(probe.get(1 + 2 * i), attr.dataType)),
+            CatLte(attr, CatLiteral.create(probe.get(2 + 2 * i), attr.dataType)))
+        }
 
-    // --- insert-only fast path --------------------------------------------
-    // Without matched clauses no target row can change: anti-join the source
-    // against the candidate scan and append just the insert rows — no touch
-    // detection, no file rewrite, no removes (the dominant cost of an
-    // appendWithoutDuplicates-style merge on a large table).
-    if (matchedN.isEmpty && bySourceN.isEmpty) {
-      val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
-      try {
+      // NOT MATCHED BY SOURCE inverts the pruning logic: the affected rows
+      // are exactly the ones the merge condition does NOT select, so
+      // condition-derived file skipping would hide them — every file is a
+      // candidate (Delta's by-source merges scan the full table likewise)
+      val candidates =
+        if (bySourceN.nonEmpty) {
+          if (lazyMode) graft.tables.DistributedSnapshot.prunedFilesByExprs(
+            spark, table.path, snap, Nil) // full set — inherent to by-source
+          else snap.files
+        }
+        else TableOps.dmlCandidates(table, snap, lazyMode, targetOnly ++ dynamicPreds)
+      val scanTime = System.currentTimeMillis() - t0
+
+      val srcAliasName = sourceAlias.getOrElse("__graft_src")
+      val srcDf = sourceCached.withColumn(SrcExists, lit(true)).alias(srcAliasName)
+      val sourceColsRenamed = source.columns.toSeq
+
+      // --- insert-only fast path ------------------------------------------
+      // Without matched clauses no target row can change: anti-join the
+      // source against the candidate scan and append just the insert rows —
+      // no touch detection, no file rewrite, no removes (the dominant cost
+      // of an appendWithoutDuplicates-style merge on a large table).
+      if (matchedN.isEmpty && bySourceN.isEmpty) {
         val tgtScanAll = table.dfForFiles(snap, candidates).alias(targetAlias)
         val unmatchedSrc = srcDf.join(tgtScanAll, expr(condition), "left_anti")
         var action: Column = lit(Drop)
@@ -374,7 +375,6 @@ object GraftMerge {
           .where(col(ActionCol) =!= Drop)
           .localCheckpoint(false)
         val nIns = withAction.count()
-        val numSourceRows = sourceCached.count()
         val insCols = outFields.map(f =>
           insertColumn(f.name, srcAliasName, notMatchedN, sourceColsRenamed, withAction)
             .cast(f.dataType).as(f.name))
@@ -405,38 +405,28 @@ object GraftMerge {
           readFiles = candidates.map(_.path),
           readVersion = Some(snap.version),
           skipDataWrite = nIns == 0)
-      } finally {
-        sourceCached.unpersist()
-        freeNewBlocks(spark, persistedBefore)
       }
-    }
 
-    // --- 2+3. fused touch-detection + rewrite join -------------------------
-    // ONE full-outer join over all candidate rows (each carrying its file
-    // name) replaces the former inner "touch" join plus second full-outer
-    // over touched files: candidates are scanned once; the multi-match guard,
-    // source-row count and merge metrics fall out of a single aggregate over
-    // the checkpointed join, and the touched-file set out of a cheap
-    // distinct-collect over the same cached blocks.
-    // localCheckpoint (not persist): the joined frame feeds several jobs and
-    // carries synthetic row ids — a lost-and-recomputed cache partition would
-    // reassign ids between jobs, so lineage is cut: a lost partition fails
-    // the merge instead of silently corrupting it. Blocks are freed
-    // explicitly in the finally (checkpointed RDDs otherwise linger until
-    // driver GC).
-    val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
-    val candRows = table.dfForFiles(snap, candidates)
-      .withColumn(FileCol, input_file_name())
-      .withColumn(TgtExists, monotonically_increasing_id())
-      .alias(targetAlias)
-    val joinedBase = candRows.join(srcDf, expr(condition), "full_outer")
-    val joined = joinedBase
-      .withColumn(ActionCol, actionExpr(matchedN, notMatchedN, bySourceN, joinedBase))
-      .localCheckpoint(false)
+      // --- 2+3. fused touch-detection + rewrite join -----------------------
+      // ONE full-outer join over all candidate rows (each carrying its file
+      // name) serves both touch detection and the rewrite: candidates are
+      // scanned once.
+      // localCheckpoint (not persist): the joined frame feeds the
+      // disposition aggregate, the data write and the CDC write, and
+      // carries synthetic row ids — a lost-and-recomputed cache partition
+      // would reassign ids between jobs, so lineage is cut: a lost partition
+      // fails the merge instead of silently corrupting it. Blocks are freed
+      // explicitly in the finally (checkpointed RDDs otherwise linger until
+      // driver GC).
+      val candRows = table.dfForFiles(snap, candidates)
+        .withColumn(FileCol, input_file_name())
+        .withColumn(TgtExists, monotonically_increasing_id())
+        .alias(targetAlias)
+      val joinedBase = candRows.join(srcDf, expr(condition), "full_outer")
+      val joined = joinedBase
+        .withColumn(ActionCol, actionExpr(matchedN, notMatchedN, bySourceN, joinedBase))
+        .localCheckpoint(false)
 
-    try {
-      // --- metrics from disposition counts (single pass over cached join) --
-      val matchedCodes = matchedN.indices.map(matchedCode)
       // by-source updates/deletes count and behave like their matched
       // counterparts everywhere downstream (metrics, keep-filter, CDC)
       val updateCodes = matchedN.zipWithIndex.collect {
@@ -457,54 +447,61 @@ object GraftMerge {
       def countWhere(codes: Seq[Int]): Column =
         sum(when(inCodes(codes), 1L).otherwise(0L))
       val isPair = col(TgtExists).isNotNull && col(SrcExists).isNotNull
-      val m = joined.agg(
-        countWhere(updateCodes).as("upd"),
-        countDistinct(when(inCodes(deleteCodes), col(TgtExists))).as("del"),
-        countWhere(insertCodes).as("ins"),
-        count(when(isPair, 1)).as("mpairs"),
-        countDistinct(when(isPair, col(TgtExists))).as("mrows"),
-        countDistinct(col(SrcIdCol)).as("nsrc")
-      ).collect()(0)
-      def g(i: Int): Long = if (m.isNullAt(i)) 0L else m.getLong(i)
-      val (nUpd, nDel, nIns) = (g(0), g(1), g(2))
+
+      // --- disposition aggregate -------------------------------------------
+      // ONE two-level aggregate over the checkpointed join yields the touched
+      // files, every row metric and the multi-match guard. It keeps only
+      // matched pairs, by-source-coded and insert-coded rows. Level 1 folds
+      // the join rows of each target row — (file, row id) → pair count,
+      // delete flag, update and insert counts — so deleted rows count once
+      // however many source rows matched them; level 2 folds target rows
+      // into their file. No countDistinct (so no Expand), and the driver
+      // receives one row per touched file plus one null-file row carrying
+      // the inserts: O(touched files), however many rows the merge changes.
+      val perFile = joined
+        .where(isPair || inCodes(bySourceCodes) || inCodes(insertCodes))
+        .groupBy(col(FileCol), col(TgtExists))
+        .agg(
+          count(when(isPair, 1)).as("pairs"),
+          max(when(inCodes(deleteCodes), 1L).otherwise(0L)).as("del"),
+          countWhere(updateCodes).as("upd"),
+          countWhere(insertCodes).as("ins"))
+        .groupBy(col(FileCol))
+        .agg(
+          sum(when(col("pairs") > 1, 1L).otherwise(0L)),
+          sum(when(col("pairs") > 1, col("pairs") - 1).otherwise(0L)),
+          sum(col("del")), sum(col("upd")), sum(col("ins")))
+        .collect()
+      def total(i: Int): Long =
+        perFile.iterator.map(r => if (r.isNullAt(i)) 0L else r.getLong(i)).sum
+      val (multiRows, extraMatches) = (total(1), total(2))
+      val (nDel, nUpd, nIns) = (total(3), total(4), total(5))
       // SQL MERGE semantics (and Delta's rule): multiple source matches for
       // one target row are permitted ONLY when the sole matched clause is an
       // unconditional delete (all matches agree); anything else — update
       // clauses or conditional deletes — is nondeterministic, so fail loudly.
       val multiMatchOk = matchedN == Seq(MatchedClause(None, DeleteAction))
-      if (!multiMatchOk && g(3) != g(4))
+      if (!multiMatchOk && extraMatches > 0)
         throw new IllegalStateException(
-          s"MERGE aborted: ${g(3) - g(4)} target row(s) matched by multiple source rows; " +
-            "deduplicate the source on the merge key first")
-      val numSourceRows = g(5)
+          s"MERGE aborted: $multiRows target row(s) matched by multiple source rows " +
+            s"($extraMatches extra match(es)); deduplicate the source on the merge key first")
 
-      // touched files: the distinct file names seen on matched pairs, decoded
+      // touched files: every non-null file name of the aggregate (matched
+      // pairs and by-source rows carry their file, inserts none), decoded
       // once and resolved against the candidate list (O(uris), not O(uris ×
-      // candidates)). A distinct-collect over the checkpointed join, not a
-      // collect_set in the metrics aggregate: partial distinct runs map-side
-      // and the driver receives one row per file name, so a 100k-file merge
-      // never funnels every URI through a single aggregation buffer.
+      // candidates))
       val touchedUris: Set[String] =
-        joined.where(isPair || inCodes(bySourceCodes)).select(col(FileCol)).distinct()
-          .collect().iterator.map(_.getString(0)).toSet
+        perFile.iterator.filterNot(_.isNullAt(0)).map(_.getString(0)).toSet
       val touched = TableWriter.resolveTouched(touchedUris, candidates)
-
-      // numTargetRowsCopied without another distinct-aggregate pass: every
-      // row of a touched file is either updated, deleted, or copied, and the
-      // per-file row counts are already in the log's footer stats
-      val statRecords = touched.map(f => GraftLog.parseStats(f.stats).map(_.numRecords))
       lazy val touchedNameDf = spark
         .createDataset(touchedUris.toSeq)(org.apache.spark.sql.Encoders.STRING)
         .toDF("__graft_touched_uri")
       lazy val touchedData = joined.join(broadcast(touchedNameDf),
         col(FileCol) === col("__graft_touched_uri"), "left_semi")
-      val nCopied: Long =
-        if (statRecords.forall(_.isDefined)) statRecords.flatten.sum - nDel - nUpd
-        else { // files written without stats (foreign writer): count directly
-          val r = touchedData
-            .agg(countDistinct(when(col(ActionCol) === Copy, col(TgtExists)))).collect()(0)
-          if (r.isNullAt(0)) 0L else r.getLong(0)
-        }
+      // Copy rows are unique per target row (see the output-row note below),
+      // so the stats-less fallback is a plain count
+      val nCopied = TableOps.copiedRows(touched, nDel + nUpd)(
+        touchedData.where(col(TgtExists).isNotNull && col(ActionCol) === Copy).count())
 
       // --- output rows -----------------------------------------------------
       // Rewritten target rows come only from touched files (Copy rows in

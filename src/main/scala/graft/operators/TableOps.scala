@@ -123,11 +123,13 @@ object TableOps {
 
   /** Shared head of every predicate-scoped rewrite (DELETE / UPDATE /
     * replaceWhere): stats+bloom file pruning on the predicate, then exact
-    * touch detection — the distinct set of candidate files actually
-    * CONTAINING a matching row. Only those files get rewritten.
+    * touch detection — the candidate files actually CONTAINING a matching
+    * row, each with its matched-row count. Only those files get rewritten;
+    * `matchedRows` (the counts' sum) is the operation's deleted/updated
+    * row metric, so the rewrite needs no counting pass of its own.
     */
   private case class TouchedScan(
-      candidates: Seq[AddFile], touched: Seq[AddFile], scanTimeMs: Long)
+      candidates: Seq[AddFile], touched: Seq[AddFile], matchedRows: Long, scanTimeMs: Long)
 
   /** The snapshot a predicate-scoped DML plans from: a full driver fold
     * below `spark.graft.snapshot.driverFileLimit`; past it, the HEAD —
@@ -167,9 +169,25 @@ object TableOps {
     val candidates = dmlCandidates(table, snap, lazyMode, classified.all)
     val scanTime = System.currentTimeMillis() - t0
     val candDf = table.dfForFiles(snap, candidates).withColumn("__graft_file", input_file_name())
-    val touchedFiles = candDf.where(cond.column(candDf)).select("__graft_file")
-      .distinct().collect().map(_.getString(0)).toSet
-    TouchedScan(candidates, TableWriter.resolveTouched(touchedFiles, candidates), scanTime)
+    // one driver row per touched file (partial counts run map-side)
+    val perFile = candDf.where(cond.column(candDf)).groupBy("__graft_file").count()
+      .collect().map(r => r.getString(0) -> r.getLong(1))
+    TouchedScan(candidates, TableWriter.resolveTouched(perFile.map(_._1), candidates),
+      perFile.map(_._2).sum, scanTime)
+  }
+
+  /** Rows a copy-on-write rewrite of `touched` carries over unchanged. Each
+    * live row of a touched file is either changed (`changed`: deleted,
+    * updated or matched) or copied, and the live row count is already in
+    * the log — footer `numRecords` minus any deletion-vector cardinality —
+    * so no counting pass runs. Files written without stats (a foreign
+    * writer) fall back to `countCopied`, a direct count.
+    */
+  private[operators] def copiedRows(touched: Seq[AddFile], changed: Long)(
+      countCopied: => Long): Long = {
+    val live = touched.map(f => GraftLog.parseStats(f.stats)
+      .map(_.numRecords - f.dv.map(_.cardinality).getOrElse(0L)))
+    if (live.forall(_.isDefined)) live.flatten.sum - changed else countCopied
   }
 
   /** DELETE FROM table [WHERE condition]. Returns the committed version.
@@ -197,7 +215,8 @@ object TableOps {
     val (snap, lazyMode) = dmlSnap(table)
     if (DeletionVectors.enabled(snap)) return dvDelete(table, snap, rc, t0, lazyMode)
 
-    val TouchedScan(candidates, touched, scanTime) = scanTouched(table, snap, rc, lazyMode)
+    val TouchedScan(candidates, touched, nDel, scanTime) =
+      scanTouched(table, snap, rc, lazyMode)
 
     // 3-valued logic: a NULL-evaluating predicate must NOT delete the row
     // (SQL DELETE semantics) — collapse NULL to false so those rows are
@@ -207,11 +226,7 @@ object TableOps {
       .withColumn("__graft_del", coalesce(rc.column(touchedBase), lit(false)))
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      val m = touchedRows.agg(
-        sum(when(col("__graft_del"), 1L).otherwise(0L)),
-        sum(when(!col("__graft_del"), 1L).otherwise(0L))).collect()(0)
-      val nDel = if (m.isNullAt(0)) 0L else m.getLong(0)
-      val nCopied = if (m.isNullAt(1)) 0L else m.getLong(1)
+      val nCopied = copiedRows(touched, nDel)(touchedRows.where(!col("__graft_del")).count())
 
       val outCols = snap.schema.fieldNames.map(col).toSeq
       val keep = touchedRows.where(!col("__graft_del")).select(outCols: _*)
@@ -464,7 +479,8 @@ object TableOps {
       s"UPDATE SET references column(s) not in the table schema: ${unknown.mkString(", ")}")
     if (DeletionVectors.enabled(snap)) return dvUpdate(table, snap, rc, set, t0, lazyMode)
 
-    val TouchedScan(candidates, touched, scanTime) = scanTouched(table, snap, rc, lazyMode)
+    val TouchedScan(candidates, touched, nUpd, scanTime) =
+      scanTouched(table, snap, rc, lazyMode)
 
     // NULL predicate ⇒ not updated (3VL): copy the row through unmodified
     // and count it as copied, matching SQL UPDATE semantics
@@ -473,11 +489,7 @@ object TableOps {
       .withColumn("__graft_upd", coalesce(rc.column(touchedBase), lit(false)))
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      val m = touchedRows.agg(
-        sum(when(col("__graft_upd"), 1L).otherwise(0L)),
-        sum(when(!col("__graft_upd"), 1L).otherwise(0L))).collect()(0)
-      val nUpd = if (m.isNullAt(0)) 0L else m.getLong(0)
-      val nCopied = if (m.isNullAt(1)) 0L else m.getLong(1)
+      val nCopied = copiedRows(touched, nUpd)(touchedRows.where(!col("__graft_upd")).count())
 
       val fields = snap.schema.fieldNames.toSeq
       val outCols = fields.map { c =>
@@ -793,7 +805,7 @@ object TableOps {
         "table schema; replaceWhere does not evolve the schema — drop or " +
         "rename them explicitly")
 
-    val TouchedScan(candidates, touched, scanTime) =
+    val TouchedScan(candidates, touched, nDel, scanTime) =
       scanTouched(table, snap, TextCond(predicate), lazyMode)
 
     val touchedRows = table.dfForFiles(snap, touched)
@@ -809,11 +821,7 @@ object TableOps {
       .select(fields.map(col): _*)
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      val m = touchedRows.agg(
-        sum(when(col("__graft_del"), 1L).otherwise(0L)),
-        sum(when(!col("__graft_del"), 1L).otherwise(0L))).collect()(0)
-      val nDel = if (m.isNullAt(0)) 0L else m.getLong(0)
-      val nCopied = if (m.isNullAt(1)) 0L else m.getLong(1)
+      val nCopied = copiedRows(touched, nDel)(touchedRows.where(!col("__graft_del")).count())
 
       val outCols = fields.map(col)
       val keep = touchedRows.where(!col("__graft_del")).select(outCols: _*)

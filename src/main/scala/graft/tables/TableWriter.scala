@@ -13,6 +13,9 @@ import org.apache.spark.sql.types.{StructField, StructType}
   * (same-filesystem rename, cheap) into the table directory, then the commit
   * is logged. Readers only see files referenced from committed log versions,
   * so a crashed write leaves at worst orphaned files, never a torn table.
+  * A commit's change-data (CDC) rows stage on a second thread beside the
+  * data write and land in `_change_data/` only once the data side has
+  * succeeded (see `CdcStage`).
   *
   * Scale note: the actual data write is a fully distributed Spark job
   * (partitioned by `partitionBy`); only the per-file rename + footer-stat
@@ -366,6 +369,11 @@ object TableWriter {
     Fs.mkdirs(tablePath)
     val staging = Fs.createTempDir(Fs.parent(tablePath), ".graft-staging-")
     val stagingDir = Fs.child(staging, "data")
+    // CDC rows (when provided and CDF is on) stage on a second thread, next
+    // to the data write below — see [[CdcStage]]
+    val version = prevSnapshot.map(_.version + 1).getOrElse(0L)
+    val cdfOn = effectiveProps.get(GraftLog.CdfProperty).exists(_.equalsIgnoreCase("true"))
+    val cdcStage = cdc.filter(_ => cdfOn).map(new CdcStage(spark, tablePath, _, newSchema))
     try {
       // column mapping's write boundary: staged parquet carries PHYSICAL
       // column names (identity select for unmapped tables)
@@ -465,14 +473,10 @@ object TableWriter {
               "the input frame is nondeterministic — checkpoint it before writing")
       }
 
-      // 4. CDC files (when provided and CDF enabled)
-      val version = prevSnapshot.map(_.version + 1).getOrElse(0L)
-      val cdfOn = effectiveProps.get(GraftLog.CdfProperty).exists(_.equalsIgnoreCase("true"))
-      val cdcActions: Seq[Action] = cdc match {
-        case Some(cdcDf) if cdfOn =>
-          writeCdcFiles(spark, tablePath, version, cdcDf, newSchema)
-        case _                    => Nil
-      }
+      // 4. CDC files: their staging write ran alongside steps 1-3; the files
+      // enter `_change_data` only now that the data staging write and its
+      // stats have succeeded
+      val cdcActions: Seq[Action] = cdcStage.map(_.land(version)).getOrElse(Nil)
 
       // 5. assemble + commit, with optimistic-concurrency retry.
       // A blind append (no removed files, no read footprint, no overwrite)
@@ -675,7 +679,12 @@ object TableWriter {
           Console.err.println(s"graft expired-log cleanup of $tablePath skipped: ${e.getMessage}")
         }
       committed
-    } finally Fs.deleteRecursively(staging)
+    } catch {
+      case scala.util.control.NonFatal(e) => throw cdcStage.fold(e)(_.abort(e))
+    } finally {
+      cdcStage.foreach(_.close())
+      Fs.deleteRecursively(staging)
+    }
   }
 
   val AutoCompactProperty = "graft.autoOptimize.autoCompact"
@@ -951,23 +960,66 @@ object TableWriter {
     Fs.moveNoReplace(out2, stagingDir)
   }
 
-  /** Write CDC rows (must already carry `_change_type`) under
-    * `_change_data/` — with PHYSICAL column names under column mapping,
-    * like the data files: physical names never change, so change files
-    * stay readable across RENAME COLUMN (the readers translate back via
-    * [[ColumnMapping.toLogical]]); `_change_type` is not a table column
-    * and passes through untouched.
+  /** Threads for [[CdcStage]]: daemon, created on demand, reclaimed when
+    * idle — no thread exists while no CDF write runs.
     */
-  private def writeCdcFiles(
-      spark: SparkSession,
-      tablePath: String,
-      version: Long,
-      cdcDf: DataFrame,
-      tableSchema: StructType): Seq[Action] = {
-    val staging = Fs.createTempDir(Fs.parent(tablePath), ".graft-cdc-")
-    try {
-      val stagingDir = Fs.child(staging, "cdc")
-      ColumnMapping.toPhysical(cdcDf, tableSchema).write.mode("overwrite").parquet(stagingDir)
+  private lazy val cdcPool = java.util.concurrent.Executors.newCachedThreadPool { r =>
+    val t = new Thread(r, "graft-cdc-write")
+    t.setDaemon(true)
+    t
+  }
+
+  /** The CDC staging write of one commit, started on a second thread so it
+    * overlaps the data staging write instead of following it (a DML is
+    * bound by its chain of sequential Spark jobs, not by executor work).
+    * The thread carries the writer's active session and local properties
+    * (job group and tags, scheduler pool, SQL execution id) through
+    * `SQLExecution.withThreadLocalCaptured`, Spark's own mechanism for work
+    * it forks off an execution thread.
+    * Rows (which must already carry `_change_type`) are written with
+    * PHYSICAL column names under column mapping, like the data files:
+    * physical names never change, so change files stay readable across
+    * RENAME COLUMN (the readers translate back via
+    * [[ColumnMapping.toLogical]]); `_change_type` is not a table column and
+    * passes through untouched.
+    *
+    * Failure safety: both writes' jobs share one job tag, so whichever
+    * fails first cancels the other; [[land]] moves the staged files into
+    * `_change_data/` only after the data side succeeded, and [[close]]
+    * waits for the thread before deleting the `.graft-cdc-` staging dir —
+    * a failed commit leaves no change file behind.
+    */
+  private final class CdcStage(
+      spark: SparkSession, tablePath: String, cdcDf: DataFrame, tableSchema: StructType) {
+    private val sc = spark.sparkContext
+    private val tag = s"graft-write-${UUID.randomUUID()}"
+    private val root = Fs.createTempDir(Fs.parent(tablePath), ".graft-cdc-")
+    private val stagingDir = Fs.child(root, "cdc")
+    private val aborted = new java.util.concurrent.atomic.AtomicBoolean(false)
+    @volatile private var failure: Throwable = null
+    // tag this (the writer's) thread before the fork, so the CDC thread's
+    // captured properties carry the tag too
+    sc.addJobTag(tag)
+    private val done = org.apache.spark.sql.execution.SQLExecution.withThreadLocalCaptured(
+        spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], cdcPool) {
+      try ColumnMapping.toPhysical(cdcDf, tableSchema).write.mode("overwrite").parquet(stagingDir)
+      catch { case e: Throwable =>
+        failure = e
+        if (aborted.compareAndSet(false, true))
+          sc.cancelJobsWithTag(tag, "the CDC staging write of the same commit failed")
+        throw e
+      }
+    }
+
+    private def await(): Unit =
+      try done.get()
+      catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+
+    /** Waits for the staging write, then moves its files under
+      * `_change_data/` and returns their actions.
+      */
+    def land(version: Long): Seq[Action] = {
+      await()
       val cdcRoot = Fs.child(tablePath, GraftLog.CdcDirName)
       Fs.mkdirs(cdcRoot)
       listParquetFiles(stagingDir).map { src =>
@@ -976,7 +1028,29 @@ object TableWriter {
         Fs.moveNoReplace(src, dst)
         AddCDCFile(s"${GraftLog.CdcDirName}/$name", Fs.size(dst))
       }
-    } finally Fs.deleteRecursively(staging)
+    }
+
+    /** The writer failed with `e`: cancels the CDC jobs and returns `e` —
+      * unless the CDC write failed first (and cancelled the writer's jobs),
+      * whose error is then the one to report.
+      */
+    def abort(e: Throwable): Throwable =
+      if (aborted.compareAndSet(false, true)) {
+        sc.cancelJobsWithTag(tag, "the data write of the same commit failed")
+        e
+      } else {
+        if (failure ne e) failure.addSuppressed(e)
+        failure
+      }
+
+    /** Untags the writer's thread, waits for the CDC thread to finish and
+      * deletes the staging dir (files already landed are not in it).
+      */
+    def close(): Unit = {
+      sc.removeJobTag(tag)
+      try await() catch { case scala.util.control.NonFatal(_) => () }
+      Fs.deleteRecursively(root)
+    }
   }
 
   /** Move parquet files from staging into table dir, keeping partition

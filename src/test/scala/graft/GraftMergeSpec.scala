@@ -2,7 +2,9 @@ package graft
 
 import org.scalatest.funspec.AnyFunSpec
 
-import graft.operators.GraftMerge
+import org.apache.spark.storage.StorageLevel
+
+import graft.operators.{GraftMerge, TableOps}
 import graft.tables._
 
 class GraftMergeSpec extends AnyFunSpec with SparkSessionTestWrapper {
@@ -350,5 +352,199 @@ class GraftMergeSpec extends AnyFunSpec with SparkSessionTestWrapper {
       val removed = t.log.actionsAt(1).collect { case r: RemoveFile => r.path }
       assert(removed.nonEmpty && removed.forall(_.contains("country=US")))
     }
+
+    it("a merge failing after the source persist frees the cached source") {
+      val t = mkTable(tmpTableDir("merge-leak"))
+      val source = Seq((2, "B!", 200)).toDF("id", "name", "score")
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      // the clause condition does not resolve: the merge fails while
+      // building the disposition, after the probe has filled the cache
+      intercept[org.apache.spark.sql.AnalysisException] {
+        GraftMerge(t, "old").merge(source, "old.id = new.id", Some("new"))
+          .whenMatchedUpdateAll(Some("new.no_such_col > 0"))
+          .execute()
+      }
+      assert(source.storageLevel == StorageLevel.NONE)
+      assert(spark.sparkContext.getPersistentRDDs.keySet == before)
+      assert(t.version == 0L)
+    }
+
+    it("an unconditional delete matched twice commits and counts the row once") {
+      val t = mkTable(tmpTableDir("merge-multi-del"))
+      GraftMerge(t, "old")
+        .merge(Seq((2, "X", 1), (2, "Y", 2)).toDF("id", "name", "score"),
+          "old.id = new.id", Some("new"))
+        .whenMatchedDelete()
+        .execute()
+      assert(t.toDF.select("id").as[Int].collect().sorted.toSeq == Seq(1, 3))
+      val m = t.history().head._2.operationMetrics
+      assert(m("numTargetRowsDeleted") == "1")
+      assert(m("numSourceRows") == "2")
+      assert(m("numTargetRowsCopied") == "2")
+      assert(m("numTargetFilesRemoved") == "1")
+    }
+
+    it("the multi-match abort states the exact number of extra matches") {
+      // id 2 matched three times, id 3 twice: 2 target rows, 3 extra matches
+      val dupSource = Seq((2, "X", 1), (2, "Y", 2), (2, "Z", 3), (3, "P", 4), (3, "Q", 5))
+        .toDF("id", "name", "score")
+      def abortOf(clauses: GraftMerge.Builder => GraftMerge.Builder): String = {
+        val t = mkTable(tmpTableDir("merge-multi-count"))
+        val ex = intercept[IllegalStateException] {
+          clauses(GraftMerge(t, "old").merge(dupSource, "old.id = new.id", Some("new")))
+            .execute()
+        }
+        assert(t.version == 0L, "an aborted merge must not commit")
+        ex.getMessage
+      }
+      Seq(
+        abortOf(_.whenMatchedDelete(Some("new.score > 0"))),
+        abortOf(_.whenMatchedUpdateAll())).foreach { msg =>
+        assert(msg.contains("2 target row(s) matched by multiple source rows"), msg)
+        assert(msg.contains("(3 extra match(es))"), msg)
+      }
+    }
+
+    it("by-source update/delete: touched files and row counts") {
+      spark.conf.set("spark.sql.files.maxRecordsPerFile", "2")
+      val t = try GraftTable.create(spark, tmpTableDir("merge-bysource"),
+        (1 to 8).map(i => (i, s"n$i", Option(i * 10))).toDF("id", "name", "score")
+          .orderBy("id").coalesce(1))
+      finally spark.conf.unset("spark.sql.files.maxRecordsPerFile")
+      val fileOf = t.snapshot.files.map { f =>
+        f.path -> t.toDF.where(org.apache.spark.sql.functions.input_file_name()
+          .endsWith(f.path)).select("id").as[Int].collect().toSet
+      }.toMap
+      assert(fileOf.size == 4)
+      // id 1 updated by its source match (2 copied), id 9 inserted; by
+      // source, 6 deleted and 5 updated; files (3,4) and (7,8) fire no clause
+      GraftMerge(t, "old")
+        .merge(Seq((1, "A!", 100), (9, "i", 90)).toDF("id", "name", "score"),
+          "old.id = new.id", Some("new"))
+        .whenMatchedUpdateAll()
+        .whenNotMatchedInsertAll()
+        .whenNotMatchedBySourceDelete(Some("old.id = 6"))
+        .whenNotMatchedBySourceUpdateExpr(Map("name" -> "'gone'"), Some("old.id = 5"))
+        .execute()
+      val removed = t.log.actionsAt(1).collect { case r: RemoveFile => fileOf(r.path) }.toSet
+      assert(removed == Set(Set(1, 2), Set(5, 6)))
+      val m = t.history().head._2.operationMetrics
+      assert(m("numTargetFilesRemoved") == "2")
+      assert(m("numTargetRowsUpdated") == "2")
+      assert(m("numTargetRowsDeleted") == "1")
+      assert(m("numTargetRowsInserted") == "1")
+      assert(m("numTargetRowsCopied") == "1")
+      assert(m("numOutputRows") == "4")
+      assert(m("numSourceRows") == "2")
+      assertSmallDataFrameEquality(t.toDF,
+        Seq((1, "A!", 100), (2, "n2", 20), (3, "n3", 30), (4, "n4", 40), (5, "gone", 50),
+          (7, "n7", 70), (8, "n8", 80), (9, "i", 90)).toDF("id", "name", "score"))
+    }
+
+    it("DML execution shape: one disposition aggregate, CDC written beside the data") {
+      val dir = tmpTableDir("merge-shape")
+      val t = mkTable(dir, cdf = true)
+      def writes(plans: Seq[String]) = plans.filter(_.contains("InsertIntoHadoopFsRelation"))
+      def noExpand(plans: Seq[String]): Unit = plans.foreach { p =>
+        assert(!p.contains("Expand"), s"a DML plan still expands rows:\n$p")
+      }
+
+      val merge = sqlExecutionsOf {
+        GraftMerge(t, "old")
+          .merge(Seq((2, "B!", 200), (4, "d", 40)).toDF("id", "name", "score"),
+            "old.id = new.id", Some("new"))
+          .whenMatchedUpdateAll()
+          .whenNotMatchedInsertAll()
+          .execute()
+      }
+      // range probe, join checkpoint, disposition aggregate, data write,
+      // CDC write
+      assert(merge.size == 5, merge.mkString("\n----\n"))
+      assert(writes(merge).count(_.contains(".graft-staging-")) == 1)
+      assert(writes(merge).count(_.contains(".graft-cdc-")) == 1)
+      assert(merge.count(p => !p.contains("InsertIntoHadoopFsRelation") &&
+        p.contains("__graft_file") && p.contains("HashAggregate")) == 1)
+      noExpand(merge)
+
+      val delete = sqlExecutionsOf { TableOps.delete(t, Some("id = 4")) }
+      // scan aggregate, data write, CDC write
+      assert(delete.size == 3, delete.mkString("\n----\n"))
+      assert(writes(delete).size == 2)
+      noExpand(delete)
+      assert(t.toDF.select("id").as[Int].collect().sorted.toSeq == Seq(1, 2, 3))
+    }
+
+    it("a failed MERGE on a CDF table lands no change files and no staging dirs") {
+      val dir = tmpTableDir("merge-cdc-fail")
+      val t = mkTable(dir, cdf = true)
+      GraftMerge(t, "old")
+        .merge(Seq((2, "B!", 200)).toDF("id", "name", "score"), "old.id = new.id", Some("new"))
+        .whenMatchedUpdateAll()
+        .execute()
+      t.addCheckConstraint("small_score", "score < 1000")
+      val cdcDir = new java.io.File(dir, GraftLog.CdcDirName)
+      def cdcFiles: Set[String] = Option(cdcDir.list()).map(_.toSet).getOrElse(Set.empty)
+      val before = cdcFiles
+      assert(before.nonEmpty)
+      val version = t.version
+      val ex = intercept[Exception] {
+        GraftMerge(t, "old")
+          .merge(Seq((3, "C!", 5000), (7, "g", 70)).toDF("id", "name", "score"),
+            "old.id = new.id", Some("new"))
+          .whenMatchedUpdateAll()
+          .whenNotMatchedInsertAll()
+          .execute()
+      }
+      assert(Iterator.iterate(ex: Throwable)(_.getCause).takeWhile(_ != null)
+        .exists(e => String.valueOf(e.getMessage).contains("CHECK constraint small_score")), ex)
+      assert(cdcFiles == before)
+      assert(t.version == version)
+      val leftovers = new java.io.File(dir).getParentFile.list().filter(n =>
+        n.startsWith(".graft-cdc-") || n.startsWith(".graft-staging-"))
+      assert(leftovers.isEmpty, leftovers.mkString(", "))
+    }
+  }
+
+  /** Physical plans (as first planned) of the SQL executions that ran Spark
+    * jobs during `body` on this thread — or on a thread that inherited its
+    * local properties, like the CDC writer — in execution order.
+    */
+  private def sqlExecutionsOf(body: => Unit): Seq[String] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val key = "graft.spec.dmlShape"
+    val tag = java.util.UUID.randomUUID().toString
+    val plans = new java.util.concurrent.ConcurrentHashMap[Long, String]()
+    val ran = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val p = Option(e.properties)
+        p.map(_.getProperty(key)) match {
+          case Some(`tag`) =>
+            p.flatMap(x => Option(x.getProperty("spark.sql.execution.id")))
+              .foreach(id => ran.add(id.toLong))
+          case Some(t) if t == s"$tag-end" => drained.countDown()
+          case _ => ()
+        }
+      }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => plans.put(s.executionId, s.physicalPlanDescription)
+        case _ => ()
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, tag)
+      try body finally sc.setLocalProperty(key, null)
+      // listener events arrive in order: once this marker job is seen,
+      // every event of `body` has been delivered
+      sc.setLocalProperty(key, s"$tag-end")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(key, null)
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus did not drain")
+    } finally sc.removeSparkListener(listener)
+    ran.asScala.toSeq.sorted.map(plans.get)
   }
 }
